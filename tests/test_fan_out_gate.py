@@ -58,3 +58,17 @@ def test_gated_results_identical(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(batch, "FAN_OUT_MAX_BYTES", 1)
     after = dd.minhash_lsh_pairs(docs).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
+
+
+def test_one_unstattable_file_does_not_zero_the_total(
+        spark, sf_dir, tmp_path, monkeypatch):
+    # a file deleted between listing and stat counts 0 bytes; the files
+    # that do stat still count, so a big input still skips the fan-out
+    monkeypatch.setattr(batch, "_MAX_SPLIT_BYTES", 1)
+    monkeypatch.setattr(batch, "FAN_OUT_MAX_BYTES", 1)
+    real = batch.local_paths_from_input_files
+    gone = str(tmp_path / "deleted.parquet")
+    monkeypatch.setattr(batch, "local_paths_from_input_files",
+                        lambda files: [gone, *real(files)])
+    docs = load_table(spark, sf_dir, "documents")
+    assert not _has_fan_out(dd.with_shingles(docs))

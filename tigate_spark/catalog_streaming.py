@@ -767,8 +767,8 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
     doc="Replica time travel end-to-end (Delta VERSION-AS-OF analogue on "
         "the manifest-versioned store): a 4-batch availableNow changefeed "
         "materializes the replica, then the state is read back AS OF "
-        "version 2 — every table resolved at its largest version ≤ 2, so "
-        "untouched tables read older version dirs — and hash-matches the "
+        "version 2 — the fold of every committed version ≤ 2, each holding "
+        "one batch's winners — and hash-matches the "
         "last-writer-wins oracle over exactly the first half of the "
         "commit order. Source files carry forced increasing mtimes so "
         "the file source's batch order is pinned; retention semantics "
@@ -2627,9 +2627,10 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
         "twin of the executable-sink DDL entry): the DDL barrier splits "
         "micro-batches, the registry appends the new version, and "
         "post-DDL sub-batches carry the evolved extra_cents payload "
-        "column — the ReplicaSink's merge unions evolved and pre-DDL "
-        "state by NAME (allowMissingColumns) and the state read "
-        "footer-merges version dirs written under either schema, so the "
+        "column — the merge-on-read ReplicaSink's state read "
+        "footer-merges the delta versions written under either schema "
+        "(mergeSchema NULL-fills the pre-DDL ones) before the LWW fold, "
+        "so the "
         "new column appears downstream with NULL for rows whose last "
         "writer predates the DDL (parquet ADD COLUMN semantics: no "
         "backfill, unlike the SQLite DEFAULT) and the mounted value for "

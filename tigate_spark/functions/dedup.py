@@ -39,6 +39,9 @@ MINHASH_K = 8
 #: LSH bands use r=2 rows — a collision needs two agreeing minhashes,
 #: which kills the common-feature buckets a single shared shingle creates
 MINHASH_BANDS = 4
+# the band index rides the top two bits of the packed `band << 62 | v`
+# bucket key, so at most four bands fit
+assert MINHASH_BANDS <= 4, "band-key packing has 2 bits for the band index"
 #: drop LSH buckets bigger than this — an oversized bucket signals a
 #: corpus-common feature, not near-duplication, and would go quadratic
 LSH_BUCKET_CAP = 100

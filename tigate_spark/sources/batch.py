@@ -114,10 +114,13 @@ def fan_out_if_small(df: DataFrame) -> DataFrame:
       scan, just unsizeable from here → SKIP the fan-out (at lake scale
       the scan has its own splits; an unconditional shuffle of a remote
       multi-TB corpus is exactly what this gate exists to remove);
-    - local files whose size read fails (deleted between listing and
-      stat, odd URI) → indeterminate local-scan case → KEEP the fan-out
-      (only the local bench/test layout produces it, and there the
-      fan-out is the measured win).
+    - a local file whose size read fails (deleted between listing and
+      stat, odd URI) → that file counts 0 bytes and the rest still
+      count, so one failed stat cannot switch the fan-out back on for a
+      big input;
+      if every stat fails the total is 0 and the fan-out is KEPT (only
+      the local bench/test layout produces it, and there the fan-out is
+      the measured win).
     """
     try:
         files = df.inputFiles()
@@ -129,10 +132,12 @@ def fan_out_if_small(df: DataFrame) -> DataFrame:
             return df
         sc = df.sparkSession.sparkContext
         par = sc.defaultParallelism
-        try:
-            total = sum(os.path.getsize(p) for p in paths)
-        except OSError:
-            total = 0  # indeterminate local case: keep the fan-out
+        total = 0
+        for p in paths:
+            try:
+                total += os.path.getsize(p)
+            except OSError:
+                pass  # unsizeable file: the rest still count
         if total >= par * _MAX_SPLIT_BYTES or total > FAN_OUT_MAX_BYTES:
             return df
         return df.repartition(par)

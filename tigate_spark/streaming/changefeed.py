@@ -916,11 +916,12 @@ class Changefeed:
                      fence_sub: int | None = None) -> None:
         # every sink runs several actions per batch (data write,
         # bookkeeping, checkpoint) — cache the batch once so the source is
-        # scanned once, not once per action. The replica merge keys on
+        # scanned once, not once per action. The replica delta keys on
         # (table_id, pk): pre-clustering the cache on the same key gives
         # the cache full-width parallelism (a 1-file micro-batch otherwise
-        # materializes on one task) and lets the merge agg reuse the
-        # partitioning instead of re-exchanging the incoming side.
+        # materializes on one task) and lets the sink's per-key max_by
+        # fold of the batch reuse the partitioning instead of
+        # re-exchanging it.
         if isinstance(self.sink, ReplicaSink):
             batch_df = batch_df.repartition(F.col("table_id"), F.col("pk"))
         prepared = self._prepare_for_sink(batch_df).persist()

@@ -4,10 +4,14 @@ Reference parity:
 - K1 MySQL/TiDB sink: txn-batched ordered apply, safe-mode REPLACE +
   delete-by-pk idempotent replay (``pkg/sink/mysql/mysql_writer.go:727-755``,
   ``:686-691``; SQL shapes ``pkg/sink/mysql/sql_builder.go:56-205``).
-  Here: :class:`ReplicaSink` — last-writer-wins MERGE of each micro-batch
-  into a parquet replica. At lake scale the same ``process_batch`` body is
-  a Delta/Iceberg ``MERGE INTO``; the union+max_by merge below is the
-  engine-neutral formulation (one shuffle on the key, map-side combinable).
+  Here: :class:`ReplicaSink` — a merge-on-read parquet replica. Each
+  micro-batch writes only its own last-writer-wins winners as a new
+  delta version; readers fold the committed versions with the same
+  ``max_by`` on the total order, and a periodic compaction folds the log
+  into one snapshot. At lake scale the same ``process_batch`` body is a
+  Delta/Iceberg merge-on-read ``MERGE INTO`` (deletion vectors / delete
+  files); the union+max_by fold is the engine-neutral formulation (one
+  shuffle on the key, map-side combinable).
 - K2 Kafka sink (``downstreamadapter/sink/kafka_sink.go``; DML worker
   ``kafka_dml_worker.go:107-369``): :class:`ChangelogSink` — router columns
   (topic, partition, key) + protocol encoding appended to a partitioned
@@ -26,7 +30,7 @@ older change cannot resurrect a deleted key (the stale-drop guarantee T9,
 ``dispatcher.go:271-279``, falls out of max_by on the total order).
 :func:`read_replica` exposes the live view; tombstones below the global
 checkpoint are GC-able (T12, ``logservice/eventstore/gc.go`` equivalent —
-here a ``VACUUM``-style rewrite, left to the store).
+here :func:`vacuum_tombstones`, a ``VACUUM``-style compaction).
 """
 
 from __future__ import annotations
@@ -48,6 +52,11 @@ DEFAULT_SYNC_POINT_US = 3600 * 1_000_000
 #: replica state layout (manifest-versioned, Delta-log-style)
 _MANIFEST = "_manifest"
 _DATA = "data"
+#: the latest snapshot version, one integer in a small text file
+_SNAPSHOT = "_snapshot"
+#: the manifest's one schema, read and written explicitly — reading it
+#: never runs a footer-inference job
+_MANIFEST_SCHEMA = "table_id bigint, version bigint"
 
 
 def _manifest_dir(state_dir: str) -> str:
@@ -58,25 +67,64 @@ def _data_dir(state_dir: str) -> str:
     return os.path.join(state_dir, _DATA)
 
 
+def _version_dir(state_dir: str, version: int) -> str:
+    return os.path.join(_data_dir(state_dir), f"v={version}")
+
+
+def _snapshot_version(state_dir: str) -> int:
+    """The latest snapshot version (0 before the first compaction).
+
+    A snapshot folds every version below it, so nothing below it is ever
+    read again. The marker is written after the snapshot's manifest rows
+    commit and before any cleanup, so leftovers of a partial cleanup are
+    never folded."""
+    try:
+        with open(os.path.join(state_dir, _SNAPSHOT)) as f:
+            return int(f.read())
+    except FileNotFoundError:
+        return 0
+
+
 def _read_manifest(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The manifest log: (table_id, version) rows appended per batch —
-    a table's current state lives in ``data/v=<max version>``. Returns
-    None before the first commit."""
+    """The live manifest log: one (table_id, version) row per table each
+    committed version covers, from the latest snapshot on. Returns None
+    before the first commit."""
     mdir = _manifest_dir(state_dir)
     if not os.path.exists(mdir):
         return None
-    return spark.read.parquet(mdir).select(
-        F.col("table_id").cast("bigint").alias("table_id"),
-        F.col("version").cast("bigint").alias("version"),
+    return (spark.read.schema(_MANIFEST_SCHEMA).parquet(mdir)
+            .filter(F.col("version") >= _snapshot_version(state_dir)))
+
+
+def _lww(df: DataFrame) -> DataFrame:
+    """Last-writer-wins fold: the ``max_by`` winner per (table_id, pk)
+    over the exact total order (commit_ts, start_ts, D<U<I, seq). The
+    winner keeps its full order key, so folding winners again (a later
+    batch, a replay, a re-read of an older version) picks the same row —
+    the fold is idempotent and order-insensitive. One shuffle on the key,
+    map-side combinable; columns keep the input's order."""
+    keys = ("table_id", "pk")
+    rest = [c for c in df.columns if c not in keys]
+    order_key = F.struct(
+        F.col("commit_ts"), F.col("start_ts"), op_rank_col(), F.col("seq")
     )
+    w = df.groupBy(*keys).agg(
+        F.max_by(F.struct(*[F.col(c) for c in rest]), order_key).alias("w")
+    )
+    return w.select(*[c if c in keys else F.col(f"w.{c}").alias(c)
+                      for c in df.columns])
 
 
 def _resolve_state(spark: SparkSession, state_dir: str,
                    man: DataFrame) -> DataFrame:
-    """Current state rows: data tree joined against each table's
-    max-version manifest row. Superseded copies (and orphan version dirs
-    a crash left without a manifest row) drop out of the version match —
-    no driver-side listing, linking, or renames anywhere on this path."""
+    """Merge-on-read: the LWW fold of every committed version's rows.
+
+    A data row counts only if its (table_id, v) has a row in ``man`` — a
+    ``left_semi`` join against the manifest, so an orphan version dir (a
+    crash between the data write and the manifest append) and a version
+    below the latest snapshot (left by a partial cleanup) stay invisible.
+    Passing a filtered manifest folds a prefix of the log (time travel).
+    No driver-side listing, linking or renames anywhere on this path."""
     data = (
         # mergeSchema: version dirs written before a DDL lack the
         # evolved payload columns — the union schema NULL-fills them
@@ -89,12 +137,10 @@ def _resolve_state(spark: SparkSession, state_dir: str,
         .withColumn("table_id", F.col("table_id").cast("bigint"))
         .withColumn("v", F.col("v").cast("bigint"))
     )
-    cur = man.groupBy("table_id").agg(F.max("version").alias("version"))
-    return (
-        data.join(cur, "table_id", "inner")
-        .filter(F.col("v") == F.col("version"))
-        .drop("v", "version")
+    committed = data.join(
+        man.withColumnRenamed("version", "v"), ["table_id", "v"], "left_semi"
     )
+    return _lww(committed.drop("v"))
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -108,14 +154,15 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
 
 def read_state_as_of(spark: SparkSession, state_dir: str,
                      version: int) -> DataFrame | None:
-    """Time travel: the replica state as of manifest ``version`` —
-    every table resolved at its largest version ≤ ``version`` (a table
-    untouched since an earlier batch reads its older version dir). The
-    manifest-versioned layout gives this for free, exactly like Delta's
-    ``VERSION AS OF``; retention lasts until :meth:`ReplicaSink.compact`
-    reclaims superseded versions (the VACUUM analogue — after a compact,
-    only versions at/after the snapshot remain addressable). Returns
-    None if no manifest row is ≤ ``version``."""
+    """Time travel: the replica state as of manifest ``version`` — the
+    fold of every committed version ≤ ``version``. Each version holds
+    the LWW winners of one batch (or a compaction snapshot of the whole
+    state), so the prefix fold is exactly the state after that commit,
+    like Delta's ``VERSION AS OF``. Retention lasts until
+    :meth:`ReplicaSink.compact` writes a snapshot (the VACUUM analogue —
+    after a compact, only versions at/after the snapshot remain
+    addressable). Returns None if no addressable version is
+    ≤ ``version``."""
     man = _read_manifest(spark, state_dir)
     if man is None:
         return None
@@ -210,30 +257,59 @@ class Bookkeeping:
 
 
 class ReplicaSink:
-    """K1: merge each micro-batch into a materialized replica (parquet).
+    """K1: apply each micro-batch to a materialized replica (parquet).
 
-    State schema: (table_id, pk, op, commit_ts, start_ts, op_rank, seq,
-    *payload_cols) — the winning change per key plus its order key, so the
-    next merge's max_by is a pure union+agg (idempotent under replay).
+    State schema: (table_id, pk, op, commit_ts, start_ts, seq,
+    *payload_cols) — a winning change per key plus its order key, so
+    folding any set of versions is a pure union + ``max_by`` (idempotent
+    under replay).
 
-    Storage is manifest-versioned (a Delta-log commit protocol in
-    miniature)::
+    Storage is a manifest-versioned merge-on-read log (a Delta-log commit
+    protocol in miniature)::
 
         state_dir/_manifest/*.parquet       log of (table_id, version)
         state_dir/data/v=<n>/table_id=<id>/*.parquet
+        state_dir/_snapshot                 latest snapshot version
 
-    Each batch writes ONLY the touched tables' winner rows into a fresh
-    ``v=<n>`` directory and appends O(touched) manifest rows; a table's
-    current state is its max-version manifest row. Per-batch driver work
-    is O(1) filesystem calls (two Spark writes, one existence probe) —
-    no per-table listdir/hard-link loop and no POSIX dir rename, so the
-    layout holds on object stores and at the reference's >1M-table design
-    point (``README.md:5``). Superseded versions are reclaimed by the
-    amortized :meth:`compact` (Delta checkpoint + VACUUM equivalent),
-    triggered every ``compact_every`` commits. A crash between the data
-    write and the manifest append leaves an orphan version dir that no
-    manifest row references — invisible to readers, clobbered by the
-    replayed batch (same next version), swept by the next compact.
+    Each batch writes ONLY its own per-key winners as delta version
+    ``v=<n>`` (one file per touched table for a small batch) and appends
+    O(touched) manifest rows — the apply cost grows with the batch, never
+    with the state, like the reference's MySQL writer
+    (``mysql_writer.go:727-755``). Readers fold the committed versions
+    (:func:`_resolve_state`). The next version and the version count live
+    on the sink: seeded from the manifest on the first batch, advanced
+    only after a manifest append commits, reset by :meth:`compact`. A
+    warm batch reads neither the manifest nor the state, and its driver
+    work is two tiny probes (the ``_snapshot`` marker and the next
+    version's dir) — no per-table listdir/hard-link loop and
+    no POSIX dir rename, so the layout holds on object stores and at the
+    reference's >1M-table design point (``README.md:5``). The amortized
+    :meth:`compact` (Delta checkpoint + VACUUM equivalent) folds the log
+    into one snapshot version every ``compact_every`` commits.
+
+    Crash windows:
+
+    - data written, manifest not appended → an orphan ``v=<n>`` that no
+      manifest row references: invisible to readers. The replayed batch
+      finds the dir by the existence probe, re-seeds from the manifest
+      (which still ends at n-1) and overwrites it.
+    - manifest appended, offsets not committed → the batch replays as a
+      new version holding the same winners; the fold is idempotent, so
+      the state does not change.
+    - crash mid-compaction, before the ``_snapshot`` marker names the new
+      snapshot → readers fold the old versions and the snapshot, which
+      is the fold of those same versions, so the live view is the same;
+      a snapshot that dropped tombstones only lets them re-fold into
+      :func:`read_state`. Once the marker is written, readers skip every
+      version below it, so a partial cleanup (a crash, or an error
+      removing a file) never brings an older row back. The next compact
+      redoes the cleanup.
+
+    The cached next version is used only while it is above the
+    ``_snapshot`` marker and its dir does not exist; otherwise the sink
+    re-seeds from the manifest. That covers a :func:`vacuum_tombstones`
+    (or compact) run on another handle — including several in a row,
+    whose cleanup removes the dir the probe would look at.
     Production deployments point the same ``process_batch`` body at a
     transactional table format (Delta/Iceberg ``MERGE INTO``).
     """
@@ -245,84 +321,75 @@ class ReplicaSink:
         self.payload_cols = payload_cols
         self.bookkeeping = bookkeeping
         self.compact_every = max(2, compact_every)
+        #: next version to write and committed versions in the log;
+        #: None until seeded from the manifest
+        self._next_ver: int | None = None
+        self._n_versions = 0
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Merge one micro-batch into the versioned replica.
-
-        Touched-table pruning stays distributed: a broadcast left-semi
-        join against the batch's distinct table_ids. The reference's
-        design point is >1M tables (README.md:5) — a driver
-        collect()+isin literal would be a driver OOM / plan explosion
-        there, while the semi-join lets dynamic partition pruning skip
-        untouched ``table_id=`` dirs in the state scan.
-        """
-        spark = batch_df.sparkSession
-        cols = ["table_id", "pk", "op", "commit_ts", "start_ts", "seq",
-                *[c for c in self.payload_cols if c in batch_df.columns]]
-        incoming = batch_df.select(*cols)
-        touched = incoming.select("table_id").distinct()
+    def _claim_version(self, spark: SparkSession) -> int:
+        """The version the next write goes to: the cached counter, unless
+        it is unseeded, at or below the latest snapshot, or its dir
+        already exists (an orphan, or another handle's snapshot) — then
+        both counters are re-seeded from the manifest (one small job)."""
+        nxt = self._next_ver
+        if (nxt is not None and nxt > _snapshot_version(self.state_dir)
+                and not os.path.exists(_version_dir(self.state_dir, nxt))):
+            return nxt
         man = _read_manifest(spark, self.state_dir)
         if man is None:
-            merged_src, next_ver, n_versions = incoming, 1, 0
+            self._next_ver, self._n_versions = 1, 0
         else:
             info = man.agg(
                 F.max("version").alias("mx"),
                 F.count_distinct("version").alias("nv"),
             ).first()
-            next_ver, n_versions = int(info["mx"]) + 1, int(info["nv"])
-            prev_all = _resolve_state(spark, self.state_dir, man).join(
-                F.broadcast(touched), "table_id", "left_semi"
-            )
-            # schema evolution across the DDL barrier: a payload column
-            # may exist on only one side (post-DDL batch into pre-DDL
-            # state, or a replayed pre-DDL batch into evolved state) —
-            # union by name NULL-fills the missing side, and the winner
-            # struct below re-derives from the union schema
-            prev = prev_all.select(
-                "table_id", "pk", "op", "commit_ts", "start_ts", "seq",
-                *[c for c in self.payload_cols if c in prev_all.columns],
-            )
-            merged_src = incoming.unionByName(
-                prev, allowMissingColumns=True)
-            cols = merged_src.columns
-        # one shuffle: max_by over the exact total order (commit_ts,
-        # start_ts, D<U<I, seq) — the winner keeps its full order key so
-        # cross-batch ties at the same commit_ts still resolve correctly
-        order_key = F.struct(
-            F.col("commit_ts"), F.col("start_ts"), op_rank_col(), F.col("seq")
-        )
-        payload = F.struct(*[F.col(c) for c in cols if c not in ("table_id", "pk")])
-        agg = merged_src.groupBy("table_id", "pk").agg(
-            F.max_by(payload, order_key).alias("w")
-        )
-        new_state = agg.select(
-            "table_id", "pk",
-            *[F.col(f"w.{c}").alias(c) for c in cols if c not in ("table_id", "pk")],
-        )
+            self._next_ver = int(info["mx"] or 0) + 1
+            self._n_versions = int(info["nv"])
+        return self._next_ver
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Write one micro-batch's winners as a delta version.
+
+        The delta is the batch's own ``max_by`` fold — the changefeed
+        hands the batch clustered on (table_id, pk), so the fold needs no
+        exchange — re-clustered by table_id so each touched table's rows
+        land in one file. The manifest rows come from the batch's
+        distinct table_ids; nothing is collected to the driver, so a
+        batch touching >1M tables (README.md:5) stays a distributed
+        write."""
+        spark = batch_df.sparkSession
+        cols = ["table_id", "pk", "op", "commit_ts", "start_ts", "seq",
+                *[c for c in self.payload_cols if c in batch_df.columns]]
+        incoming = batch_df.select(*cols)
+        ver = self._claim_version(spark)
         # data first, manifest second: rows are visible only once their
         # manifest rows land (the commit point)
-        vdir = os.path.join(_data_dir(self.state_dir), f"v={next_ver}")
-        new_state.write.mode("overwrite").partitionBy("table_id").parquet(vdir)
-        (touched.withColumn("version", F.lit(next_ver).cast("bigint"))
+        (_lww(incoming).hint("rebalance", F.col("table_id"))
+         .write.mode("overwrite").partitionBy("table_id")
+         .parquet(_version_dir(self.state_dir, ver)))
+        (incoming.select(F.col("table_id").cast("bigint").alias("table_id"))
+         .distinct()
+         .withColumn("version", F.lit(ver).cast("bigint"))
          .coalesce(1)
          .write.mode("append").parquet(_manifest_dir(self.state_dir)))
+        self._next_ver, self._n_versions = ver + 1, self._n_versions + 1
         if self.bookkeeping:
             self.bookkeeping.record(batch_df, batch_id)
-        if n_versions + 1 > self.compact_every:
+        if self._n_versions > self.compact_every:
             self.compact(spark)
 
     def compact(self, spark: SparkSession) -> None:
-        """Amortized checkpoint: rewrite the full current state into one
-        new version, append a manifest snapshot, then drop superseded
-        version dirs and old manifest log files. Crash-safe in every
-        prefix: the snapshot append wins by max-version before any delete
-        runs, and cleanup is redone by the next compact."""
+        """Amortized checkpoint: fold the whole log into one snapshot
+        version, append its manifest rows, then drop superseded version
+        dirs and old manifest log files. Crash-safe in every prefix (see
+        the class docstring): the snapshot equals the fold of what it
+        supersedes, and cleanup is redone by the next compact."""
         man = _read_manifest(spark, self.state_dir)
         if man is None:
             return
         state = _resolve_state(spark, self.state_dir, man)
-        snapshot_ver = int(man.agg(F.max("version")).first()[0]) + 1
-        _checkpoint_state(spark, self.state_dir, state, man, snapshot_ver)
+        snapshot_ver = _checkpoint_state(spark, self.state_dir, state, man)
+        self._next_ver, self._n_versions = snapshot_ver + 1, 1
 
     def live(self, spark: SparkSession) -> DataFrame:
         """The replica's live view (tombstones filtered)."""
@@ -330,36 +397,46 @@ class ReplicaSink:
 
 
 def _checkpoint_state(spark: SparkSession, state_dir: str,
-                      new_state: DataFrame, man: DataFrame,
-                      snapshot_ver: int) -> None:
-    """Write ``new_state`` as a full snapshot version and supersede the
-    manifest log with it. Cleanup of old versions/log files is driver-side
-    but amortized (runs once per ``compact_every`` commits) and
-    best-effort — a crash mid-cleanup only leaves unreferenced garbage."""
+                      new_state: DataFrame, man: DataFrame) -> int:
+    """Write ``new_state`` as a full snapshot at the next version after
+    the manifest's newest, supersede the manifest log with it and return
+    that version. The commit order is snapshot data, its manifest rows,
+    then the ``_snapshot`` marker; only then does cleanup start, so
+    readers skip whatever a partial cleanup leaves below the snapshot.
+    Cleanup of old versions/log files is driver-side but amortized (runs
+    once per ``compact_every`` commits). A log file that is already gone
+    is fine, any other error surfaces (an unremovable log would grow
+    without bound)."""
     mdir = _manifest_dir(state_dir)
     old_log_files = [
         p for p in glob.glob(os.path.join(mdir, "*"))
         if os.path.isfile(p)
     ]
-    vdir = os.path.join(_data_dir(state_dir), f"v={snapshot_ver}")
-    new_state.write.mode("overwrite").partitionBy("table_id").parquet(vdir)
-    # snapshot rows cover EVERY table the log knows (incl. now-empty ones,
-    # so a vacuumed-away table can't resurrect through an old version)
+    snapshot_ver = int(man.agg(F.max("version")).first()[0]) + 1
+    new_state.write.mode("overwrite").partitionBy("table_id").parquet(
+        _version_dir(state_dir, snapshot_ver))
+    # snapshot rows cover EVERY table the log knows, read off the small
+    # manifest rather than a second pass over the new state (a table the
+    # snapshot left empty keeps a row that matches no data)
     (man.select("table_id").distinct()
      .withColumn("version", F.lit(snapshot_ver).cast("bigint"))
      .coalesce(1)
      .write.mode("append").parquet(mdir))
+    tmp = os.path.join(state_dir, f".{_SNAPSHOT}.tmp-{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as f:
+        f.write(str(snapshot_ver))
+    os.replace(tmp, os.path.join(state_dir, _SNAPSHOT))
     for p in old_log_files:
-        try:
-            os.remove(p)
-            crc = os.path.join(os.path.dirname(p), "." + os.path.basename(p) + ".crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-        except OSError:
-            pass
+        crc = os.path.join(os.path.dirname(p), "." + os.path.basename(p) + ".crc")
+        for f in (p, crc):
+            try:
+                os.remove(f)
+            except FileNotFoundError:
+                pass
     for d in glob.glob(os.path.join(_data_dir(state_dir), "v=*")):
         if os.path.basename(d) != f"v={snapshot_ver}":
             shutil.rmtree(d, ignore_errors=True)
+    return snapshot_ver
 
 
 def read_replica(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -706,7 +783,13 @@ def vacuum_tombstones(spark: SparkSession, state_dir: str, below_ts: int) -> int
     Single pass: the removed-tombstone count rides the compaction write as
     an ``Observation`` metric — no separate pre-count scan. Implemented as
     a filtered manifest checkpoint (full snapshot version + manifest
-    supersede), so it doubles as a compact. Returns tombstones removed.
+    supersede), so it doubles as a compact. A live :class:`ReplicaSink`
+    on another handle sees the new ``_snapshot`` marker and re-seeds past
+    it. A crash after the snapshot's manifest append but before the
+    marker is written only lets the removed tombstones re-fold into
+    :func:`read_state`; the live view is unchanged. After the marker,
+    readers skip the versions below the snapshot, so a partial cleanup
+    cannot bring a vacuumed key back. Returns tombstones removed.
     """
     from pyspark.sql import Observation
 
@@ -719,6 +802,5 @@ def vacuum_tombstones(spark: SparkSession, state_dir: str, below_ts: int) -> int
     observed = state.observe(
         obs, F.sum(F.when(dead, 1).otherwise(0)).alias("n_dead")
     )
-    snapshot_ver = int(man.agg(F.max("version")).first()[0]) + 1
-    _checkpoint_state(spark, state_dir, observed.filter(~dead), man, snapshot_ver)
+    _checkpoint_state(spark, state_dir, observed.filter(~dead), man)
     return int(obs.get["n_dead"] or 0)

@@ -7,9 +7,12 @@ work is O(touched tables), so per-micro-batch wall-clock must stay FLAT
 as the stream gets 10x longer (40 micro-batches instead of 4 at the
 SAME per-batch row count). A growing per-batch curve would mean
 accumulated state or lineage leaks into every batch (the failure mode
-the manifest-versioned ReplicaSink design explicitly avoids: each batch
-writes only touched tables' winners into a fresh v=<n> dir + O(touched)
-manifest rows — streaming/sinks.py:159-204).
+the merge-on-read ReplicaSink design explicitly avoids: each batch
+writes only its own per-key winners as a fresh delta version v=<n> plus
+O(touched) manifest rows, reading neither the stored state nor the
+manifest — ``ReplicaSink.process_batch`` in streaming/sinks.py). The
+periodic compaction (every ``compact_every`` commits) folds the whole
+state and is the one batch kind whose cost grows with the state.
 
 Drives the FULL changefeed (source → normalize/filter → replica merge)
 at 1M changes / 4 batches and 10M changes / 40 batches, ~250k rows per

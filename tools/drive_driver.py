@@ -1,14 +1,15 @@
 """Self-drive the external correctness driver's protocol.
 
 Plain SparkSession (no custom confs — __spark_entry__ / ensure_confs must
-repair it), import /root/repo/__spark_entry__.py, smoke entry(), then for
+repair it), import the __spark_entry__.py at the root of the checkout
+this tool lives in, smoke entry(), then for
 every queries() entry run Spark vs DuckDB oracle at sf0.01: sort columns
 by name, normalize floats to %.10g, sort rows, compare — AND compare the
 pandas dtype-kind signature per column (int-vs-float drift fails even when
 values are numerically equal, matching the external driver's dtype-
 sensitive hash). Nonzero exit on any mismatch/error.
 
-Usage: python /tmp/drive_driver.py [--sf /root/testdata/sf0.01] [--only name1,name2] [--limit N]
+Usage: python tools/drive_driver.py [--sf DIR] [--only name1,name2] [--limit N]
 """
 import argparse
 import importlib.util
@@ -20,6 +21,11 @@ import traceback
 import duckdb
 
 from pyspark.sql import SparkSession
+
+#: the entry module at the root of the checkout this tool lives in
+ENTRY_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py")
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -75,7 +81,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     spec = importlib.util.spec_from_file_location("__spark_entry__",
-                                                  "/root/repo/__spark_entry__.py")
+                                                  ENTRY_PATH)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
