@@ -54,18 +54,22 @@ def _execution_ids(spark) -> set[int]:
     return ids
 
 
+def _plan(spark, eid: int) -> str:
+    return spark._jsparkSession.sharedState().statusStore() \
+        .execution(eid).get().physicalPlanDescription()
+
+
 def _scanned_locations(spark, eid: int) -> list[str]:
     """The ``Location:`` lines of one execution's file scans."""
-    plan = spark._jsparkSession.sharedState().statusStore() \
-        .execution(eid).get().physicalPlanDescription()
-    return [ln for ln in plan.splitlines()
+    return [ln for ln in _plan(spark, eid).splitlines()
             if ln.strip().startswith("Location:")]
 
 
 def test_warm_replica_batch_job_budget(spark, chunked_source, tmp_path):
-    """A warm batch (second on the same sink) runs at most three SQL
-    executions — delta write, manifest append, bookkeeping — and none of
-    them scans the stored state or the manifest."""
+    """A warm batch (second on the same sink) runs at most two SQL
+    executions — delta write, bookkeeping. None of them scans the stored
+    state, and none reads or writes the manifest: the commit record is
+    written by the driver, not by a Spark job."""
     from tigate_spark.streaming.sinks import Bookkeeping
 
     state_dir = str(tmp_path / "state")
@@ -81,12 +85,15 @@ def test_warm_replica_batch_job_budget(spark, chunked_source, tmp_path):
         new = sorted(_execution_ids(spark) - before)
     finally:
         warm.unpersist()
-    assert 0 < len(new) <= 3, len(new)
-    state_paths = (os.path.join(state_dir, "data"),
-                   os.path.join(state_dir, "_manifest"))
+    assert 0 < len(new) <= 2, len(new)
+    data_dir = os.path.join(state_dir, "data")
+    manifest_dir = os.path.join(state_dir, "_manifest")
     for eid in new:
         for loc in _scanned_locations(spark, eid):
-            assert not any(p in loc for p in state_paths), loc
+            assert data_dir not in loc, loc
+        assert manifest_dir not in _plan(spark, eid), eid
+    assert os.path.isfile(
+        os.path.join(manifest_dir, f"v-{2:020d}.parquet"))
     assert read_replica(spark, state_dir).count() > 0
 
 
@@ -233,3 +240,108 @@ def test_partial_cleanup_never_resurrects_a_vacuumed_key(
     sink.compact(spark)
     assert not os.path.exists(os.path.join(state_dir, "data", "v=1"))
     assert _rows(read_replica(spark, state_dir), _KEY_COLS) == want
+
+
+def test_manifest_written_by_spark_reads_the_same(
+        spark, chunked_source, tmp_path):
+    """A state dir whose manifest log Spark wrote as (table_id, version)
+    rows — the layout before one-record commits — reads identically
+    through the ``version`` projection, the next batch lands at max+1,
+    and the next compact sweeps the old part, ``.crc`` and ``_SUCCESS``
+    files."""
+    state_dir = str(tmp_path / "state")
+    mdir = os.path.join(state_dir, "_manifest")
+    b = _batches(spark, chunked_source)
+    sink = ReplicaSink(state_dir, PAYLOAD_COLS)
+    sink.process_batch(b[0], 0)
+    sink.process_batch(b[1], 1)
+    cols = read_state(spark, state_dir).columns
+    before = _rows(read_state(spark, state_dir), cols)
+    as_of_1 = _rows(read_state_as_of(spark, state_dir, 1), cols)
+    # rewrite the log the way Spark wrote it: one row per touched table
+    old_log = (spark.read.parquet(os.path.join(state_dir, "data"))
+               .select(F.col("table_id").cast("bigint"),
+                       F.col("v").cast("bigint").alias("version"))
+               .distinct())
+    assert old_log.count() > 2
+    shutil.rmtree(mdir)
+    old_log.coalesce(1).write.parquet(mdir)
+    assert _rows(read_state(spark, state_dir), cols) == before
+    assert _rows(read_state_as_of(spark, state_dir, 1), cols) == as_of_1
+    fresh = ReplicaSink(state_dir, PAYLOAD_COLS)
+    fresh.process_batch(b[2], 2)
+    assert os.path.isfile(os.path.join(mdir, f"v-{3:020d}.parquet"))
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:3]), _KEY_COLS)
+    fresh.compact(spark)
+    assert sorted(os.listdir(mdir)) == [f"v-{4:020d}.parquet"]
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:3]), _KEY_COLS)
+
+
+def test_orphan_version_without_commit_record_is_invisible(
+        spark, chunked_source, tmp_path, monkeypatch):
+    """A crash between the delta write and the commit record leaves an
+    orphan ``v=<n>`` that readers never fold; the replayed batch
+    overwrites it rather than adding to it."""
+    from tigate_spark.streaming import sinks
+
+    state_dir = str(tmp_path / "state")
+    b = _batches(spark, chunked_source)
+    sink = ReplicaSink(state_dir, PAYLOAD_COLS)
+    sink.process_batch(b[0], 0)
+
+    def crash(state_dir, version):
+        raise RuntimeError("crash before the commit record")
+
+    monkeypatch.setattr(sinks, "_commit_version", crash)
+    with pytest.raises(RuntimeError):
+        sink.process_batch(b[1], 1)
+    monkeypatch.undo()
+    orphan = os.path.join(state_dir, "data", "v=2")
+    assert os.path.isdir(orphan)
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:1]), _KEY_COLS)
+    sink.process_batch(b[1], 1)
+    n_keys = b[1].select("table_id", "pk").distinct().count()
+    assert spark.read.parquet(orphan).count() == n_keys
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:2]), _KEY_COLS)
+
+
+def test_unfinished_commit_file_is_ignored_then_swept(
+        spark, chunked_source, tmp_path, monkeypatch):
+    """A crash between the hidden-name write and the ``os.replace``
+    leaves a ``.v-<n>.parquet.tmp-*`` file holding a valid record.
+    Readers skip it (the version stays uncommitted), and the next
+    compact removes it."""
+    from tigate_spark.streaming import sinks
+
+    state_dir = str(tmp_path / "state")
+    mdir = os.path.join(state_dir, "_manifest")
+    b = _batches(spark, chunked_source)
+    sink = ReplicaSink(state_dir, PAYLOAD_COLS)
+    sink.process_batch(b[0], 0)
+    sink.process_batch(b[1], 1)
+
+    def crash(src, dst):
+        raise OSError("crash before the commit record moves into place")
+
+    monkeypatch.setattr(sinks.os, "replace", crash)
+    with pytest.raises(OSError):
+        sink.process_batch(b[2], 2)
+    monkeypatch.undo()
+    leftovers = glob.glob(os.path.join(mdir, ".v-*.tmp-*"))
+    assert [os.path.basename(p).split(".tmp-")[0] for p in leftovers] \
+        == [f".v-{3:020d}.parquet"]
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:2]), _KEY_COLS)
+    assert read_state_as_of(spark, state_dir, 3).count() \
+        == read_state_as_of(spark, state_dir, 2).count()
+    sink.compact(spark)
+    assert glob.glob(os.path.join(mdir, ".*")) == []
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:2]), _KEY_COLS)
+    sink.process_batch(b[2], 2)
+    assert _rows(read_replica(spark, state_dir), _KEY_COLS) \
+        == _rows(_lww_live(b[:3]), _KEY_COLS)

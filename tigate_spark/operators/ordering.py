@@ -17,12 +17,15 @@ from pyspark.sql import functions as F
 OP_RANK = {"D": 1, "U": 2, "I": 3}
 
 
+def op_rank_sql(op_col: str = "op") -> str:
+    """The D<U<I tie-break rank as a SQL expression — the one place it is
+    spelled out; anything not D or U (NULL included) ranks as an insert."""
+    return (f"CASE WHEN {op_col} = 'D' THEN {OP_RANK['D']} "
+            f"WHEN {op_col} = 'U' THEN {OP_RANK['U']} ELSE {OP_RANK['I']} END")
+
+
 def op_rank_col(op_col: str = "op") -> Column:
-    return (
-        F.when(F.col(op_col) == "D", 1)
-        .when(F.col(op_col) == "U", 2)
-        .otherwise(3)
-    )
+    return F.expr(op_rank_sql(op_col))
 
 
 def sorted_within_table(df: DataFrame, n_partitions: int | None = None) -> DataFrame:

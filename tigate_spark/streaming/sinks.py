@@ -6,7 +6,9 @@ Reference parity:
   ``:686-691``; SQL shapes ``pkg/sink/mysql/sql_builder.go:56-205``).
   Here: :class:`ReplicaSink` — a merge-on-read parquet replica. Each
   micro-batch writes only its own last-writer-wins winners as a new
-  delta version; readers fold the committed versions with the same
+  delta version ``data/v=<n>`` and commits it with one driver-written
+  record ``_manifest/v-<n>.parquet`` (hidden name, then ``os.replace``;
+  no Spark job); readers fold the committed versions with the same
   ``max_by`` on the total order, and a periodic compaction folds the log
   into one snapshot. At lake scale the same ``process_batch`` body is a
   Delta/Iceberg merge-on-read ``MERGE INTO`` (deletion vectors / delete
@@ -40,10 +42,12 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tigate_spark.operators.ordering import op_rank_col
+from tigate_spark.operators.ordering import op_rank_col, op_rank_sql
 
 #: syncpoint alignment interval (µs) when enabled — 1h like the reference default
 DEFAULT_SYNC_POINT_US = 3600 * 1_000_000
@@ -54,9 +58,10 @@ _MANIFEST = "_manifest"
 _DATA = "data"
 #: the latest snapshot version, one integer in a small text file
 _SNAPSHOT = "_snapshot"
-#: the manifest's one schema, read and written explicitly — reading it
-#: never runs a footer-inference job
-_MANIFEST_SCHEMA = "table_id bigint, version bigint"
+#: the manifest's one schema, read explicitly — reading it never runs a
+#: footer-inference job. Logs written as (table_id, version) rows read
+#: through the same schema by column projection.
+_MANIFEST_SCHEMA = "version bigint"
 
 
 def _manifest_dir(state_dir: str) -> str:
@@ -75,8 +80,8 @@ def _snapshot_version(state_dir: str) -> int:
     """The latest snapshot version (0 before the first compaction).
 
     A snapshot folds every version below it, so nothing below it is ever
-    read again. The marker is written after the snapshot's manifest rows
-    commit and before any cleanup, so leftovers of a partial cleanup are
+    read again. The marker is written after the snapshot's commit record
+    lands and before any cleanup, so leftovers of a partial cleanup are
     never folded."""
     try:
         with open(os.path.join(state_dir, _SNAPSHOT)) as f:
@@ -85,10 +90,26 @@ def _snapshot_version(state_dir: str) -> int:
         return 0
 
 
+def _commit_version(state_dir: str, version: int) -> None:
+    """Commit ``version``: write its one-record log file
+    ``_manifest/v-<n>.parquet`` under a hidden name (readers skip
+    dotfiles), then move it into place with one ``os.replace`` — the
+    commit point, a single PUT on an object store like a Delta log commit
+    file. Driver-side; no Spark job."""
+    mdir = _manifest_dir(state_dir)
+    os.makedirs(mdir, exist_ok=True)
+    name = f"v-{version:020d}.parquet"
+    tmp = os.path.join(mdir, f".{name}.tmp-{uuid.uuid4().hex[:8]}")
+    pq.write_table(pa.table({"version": pa.array([version], pa.int64())}), tmp)
+    os.replace(tmp, os.path.join(mdir, name))
+
+
 def _read_manifest(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The live manifest log: one (table_id, version) row per table each
-    committed version covers, from the latest snapshot on. Returns None
-    before the first commit."""
+    """The live manifest log: the committed versions from the latest
+    snapshot on, one ``version`` column (a log written as one row per
+    (table_id, version) reads the same, with repeats). Hidden
+    ``.v-*.tmp-*`` files of an unfinished commit are skipped by the
+    reader. Returns None before the first commit."""
     mdir = _manifest_dir(state_dir)
     if not os.path.exists(mdir):
         return None
@@ -102,27 +123,26 @@ def _lww(df: DataFrame) -> DataFrame:
     winner keeps its full order key, so folding winners again (a later
     batch, a replay, a re-read of an older version) picks the same row —
     the fold is idempotent and order-insensitive. One shuffle on the key,
-    map-side combinable; columns keep the input's order."""
+    map-side combinable; columns keep the input's order. Built from SQL
+    strings: every Column-API call pays call-site capture over py4j, which
+    made the plan cost more to build than a small batch costs to run."""
     keys = ("table_id", "pk")
-    rest = [c for c in df.columns if c not in keys]
-    order_key = F.struct(
-        F.col("commit_ts"), F.col("start_ts"), op_rank_col(), F.col("seq")
-    )
-    w = df.groupBy(*keys).agg(
-        F.max_by(F.struct(*[F.col(c) for c in rest]), order_key).alias("w")
-    )
-    return w.select(*[c if c in keys else F.col(f"w.{c}").alias(c)
-                      for c in df.columns])
+    rest = ", ".join(f"`{c}`" for c in df.columns if c not in keys)
+    order_key = f"struct(commit_ts, start_ts, {op_rank_sql()}, seq)"
+    w = df.groupBy(*keys).agg(F.expr(f"max_by(struct({rest}), {order_key}) AS w"))
+    return w.selectExpr(*[f"`{c}`" if c in keys else f"w.`{c}` AS `{c}`"
+                          for c in df.columns])
 
 
 def _resolve_state(spark: SparkSession, state_dir: str,
                    man: DataFrame) -> DataFrame:
     """Merge-on-read: the LWW fold of every committed version's rows.
 
-    A data row counts only if its (table_id, v) has a row in ``man`` — a
-    ``left_semi`` join against the manifest, so an orphan version dir (a
-    crash between the data write and the manifest append) and a version
-    below the latest snapshot (left by a partial cleanup) stay invisible.
+    A data row counts only if its version ``v`` has a commit record in
+    ``man`` — a ``left_semi`` join on ``v`` alone (a version's rows exist
+    only for the tables it touched), so an orphan version dir (a crash
+    between the data write and the commit record) and a version below
+    the latest snapshot (left by a partial cleanup) stay invisible.
     Passing a filtered manifest folds a prefix of the log (time travel).
     No driver-side listing, linking or renames anywhere on this path."""
     data = (
@@ -138,7 +158,7 @@ def _resolve_state(spark: SparkSession, state_dir: str,
         .withColumn("v", F.col("v").cast("bigint"))
     )
     committed = data.join(
-        man.withColumnRenamed("version", "v"), ["table_id", "v"], "left_semi"
+        man.withColumnRenamed("version", "v"), "v", "left_semi"
     )
     return _lww(committed.drop("v"))
 
@@ -267,33 +287,39 @@ class ReplicaSink:
     Storage is a manifest-versioned merge-on-read log (a Delta-log commit
     protocol in miniature)::
 
-        state_dir/_manifest/*.parquet       log of (table_id, version)
+        state_dir/_manifest/v-<n>.parquet   one commit record per version
         state_dir/data/v=<n>/table_id=<id>/*.parquet
         state_dir/_snapshot                 latest snapshot version
 
     Each batch writes ONLY its own per-key winners as delta version
-    ``v=<n>`` (one file per touched table for a small batch) and appends
-    O(touched) manifest rows — the apply cost grows with the batch, never
-    with the state, like the reference's MySQL writer
-    (``mysql_writer.go:727-755``). Readers fold the committed versions
-    (:func:`_resolve_state`). The next version and the version count live
-    on the sink: seeded from the manifest on the first batch, advanced
-    only after a manifest append commits, reset by :meth:`compact`. A
-    warm batch reads neither the manifest nor the state, and its driver
-    work is two tiny probes (the ``_snapshot`` marker and the next
-    version's dir) — no per-table listdir/hard-link loop and
-    no POSIX dir rename, so the layout holds on object stores and at the
-    reference's >1M-table design point (``README.md:5``). The amortized
+    ``v=<n>`` (one file per touched table for a small batch) and then
+    commits it with one driver-written record (:func:`_commit_version`,
+    a one-row ``version`` file moved into place by ``os.replace``) — the
+    apply cost grows with the batch, never with the state, like the
+    reference's MySQL writer (``mysql_writer.go:727-755``), and the batch
+    runs two Spark jobs: the delta write and the bookkeeping. Readers
+    fold the committed versions (:func:`_resolve_state`). The next
+    version and the version count live on the sink: seeded from the
+    manifest on the first batch, advanced only after the commit record
+    lands, reset by :meth:`compact`. A warm batch reads neither the
+    manifest nor the state, and its driver work is two probes (the
+    ``_snapshot`` marker and the next version's dir) and one commit
+    record — no per-table listdir/hard-link loop and no POSIX dir
+    rename, so the layout holds on object stores and at the reference's
+    >1M-table design point (``README.md:5``). The amortized
     :meth:`compact` (Delta checkpoint + VACUUM equivalent) folds the log
     into one snapshot version every ``compact_every`` commits.
 
     Crash windows:
 
-    - data written, manifest not appended → an orphan ``v=<n>`` that no
-      manifest row references: invisible to readers. The replayed batch
-      finds the dir by the existence probe, re-seeds from the manifest
-      (which still ends at n-1) and overwrites it.
-    - manifest appended, offsets not committed → the batch replays as a
+    - data written, commit record not in place (the crash hit before or
+      during the hidden-name write, or before the ``os.replace``) → an
+      orphan ``v=<n>`` that no record references, and maybe a hidden
+      ``.v-<n>.parquet.tmp-*`` file; readers see neither. The replayed
+      batch finds the dir by the existence probe, re-seeds from the
+      manifest (which still ends at n-1) and overwrites it; the next
+      compact removes the hidden file.
+    - record in place, offsets not committed → the batch replays as a
       new version holding the same winners; the fold is idempotent, so
       the state does not change.
     - crash mid-compaction, before the ``_snapshot`` marker names the new
@@ -353,25 +379,20 @@ class ReplicaSink:
         The delta is the batch's own ``max_by`` fold — the changefeed
         hands the batch clustered on (table_id, pk), so the fold needs no
         exchange — re-clustered by table_id so each touched table's rows
-        land in one file. The manifest rows come from the batch's
-        distinct table_ids; nothing is collected to the driver, so a
-        batch touching >1M tables (README.md:5) stays a distributed
-        write."""
+        land in one file. The commit record names only the version, so
+        nothing about the touched tables reaches the driver and a batch
+        touching >1M tables (README.md:5) stays a distributed write."""
         spark = batch_df.sparkSession
         cols = ["table_id", "pk", "op", "commit_ts", "start_ts", "seq",
                 *[c for c in self.payload_cols if c in batch_df.columns]]
         incoming = batch_df.select(*cols)
         ver = self._claim_version(spark)
-        # data first, manifest second: rows are visible only once their
-        # manifest rows land (the commit point)
+        # data first, commit record second: rows are visible only once
+        # the record lands (the commit point)
         (_lww(incoming).hint("rebalance", F.col("table_id"))
          .write.mode("overwrite").partitionBy("table_id")
          .parquet(_version_dir(self.state_dir, ver)))
-        (incoming.select(F.col("table_id").cast("bigint").alias("table_id"))
-         .distinct()
-         .withColumn("version", F.lit(ver).cast("bigint"))
-         .coalesce(1)
-         .write.mode("append").parquet(_manifest_dir(self.state_dir)))
+        _commit_version(self.state_dir, ver)
         self._next_ver, self._n_versions = ver + 1, self._n_versions + 1
         if self.bookkeeping:
             self.bookkeeping.record(batch_df, batch_id)
@@ -380,8 +401,8 @@ class ReplicaSink:
 
     def compact(self, spark: SparkSession) -> None:
         """Amortized checkpoint: fold the whole log into one snapshot
-        version, append its manifest rows, then drop superseded version
-        dirs and old manifest log files. Crash-safe in every prefix (see
+        version, commit it, then drop superseded version dirs and old
+        manifest log files. Crash-safe in every prefix (see
         the class docstring): the snapshot equals the fold of what it
         supersedes, and cleanup is redone by the next compact."""
         man = _read_manifest(spark, self.state_dir)
@@ -400,39 +421,33 @@ def _checkpoint_state(spark: SparkSession, state_dir: str,
                       new_state: DataFrame, man: DataFrame) -> int:
     """Write ``new_state`` as a full snapshot at the next version after
     the manifest's newest, supersede the manifest log with it and return
-    that version. The commit order is snapshot data, its manifest rows,
+    that version. The commit order is snapshot data, its commit record,
     then the ``_snapshot`` marker; only then does cleanup start, so
     readers skip whatever a partial cleanup leaves below the snapshot.
     Cleanup of old versions/log files is driver-side but amortized (runs
-    once per ``compact_every`` commits). A log file that is already gone
-    is fine, any other error surfaces (an unremovable log would grow
-    without bound)."""
+    once per ``compact_every`` commits). It takes every file the log held
+    before the snapshot, dotfiles included: a hidden ``.v-*.tmp-*`` left
+    by a crashed commit, and the ``.crc``/``_SUCCESS`` files of a log
+    written by Spark. A log file that is already gone is fine, any other
+    error surfaces (an unremovable log would grow without bound)."""
     mdir = _manifest_dir(state_dir)
     old_log_files = [
-        p for p in glob.glob(os.path.join(mdir, "*"))
+        p for pat in ("*", ".*") for p in glob.glob(os.path.join(mdir, pat))
         if os.path.isfile(p)
     ]
     snapshot_ver = int(man.agg(F.max("version")).first()[0]) + 1
     new_state.write.mode("overwrite").partitionBy("table_id").parquet(
         _version_dir(state_dir, snapshot_ver))
-    # snapshot rows cover EVERY table the log knows, read off the small
-    # manifest rather than a second pass over the new state (a table the
-    # snapshot left empty keeps a row that matches no data)
-    (man.select("table_id").distinct()
-     .withColumn("version", F.lit(snapshot_ver).cast("bigint"))
-     .coalesce(1)
-     .write.mode("append").parquet(mdir))
+    _commit_version(state_dir, snapshot_ver)
     tmp = os.path.join(state_dir, f".{_SNAPSHOT}.tmp-{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
         f.write(str(snapshot_ver))
     os.replace(tmp, os.path.join(state_dir, _SNAPSHOT))
     for p in old_log_files:
-        crc = os.path.join(os.path.dirname(p), "." + os.path.basename(p) + ".crc")
-        for f in (p, crc):
-            try:
-                os.remove(f)
-            except FileNotFoundError:
-                pass
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
     for d in glob.glob(os.path.join(_data_dir(state_dir), "v=*")):
         if os.path.basename(d) != f"v={snapshot_ver}":
             shutil.rmtree(d, ignore_errors=True)
@@ -785,7 +800,7 @@ def vacuum_tombstones(spark: SparkSession, state_dir: str, below_ts: int) -> int
     a filtered manifest checkpoint (full snapshot version + manifest
     supersede), so it doubles as a compact. A live :class:`ReplicaSink`
     on another handle sees the new ``_snapshot`` marker and re-seeds past
-    it. A crash after the snapshot's manifest append but before the
+    it. A crash after the snapshot's commit record but before the
     marker is written only lets the removed tombstones re-fold into
     :func:`read_state`; the live view is unchanged. After the marker,
     readers skip the versions below the snapshot, so a partial cleanup

@@ -9,8 +9,8 @@ SAME per-batch row count). A growing per-batch curve would mean
 accumulated state or lineage leaks into every batch (the failure mode
 the merge-on-read ReplicaSink design explicitly avoids: each batch
 writes only its own per-key winners as a fresh delta version v=<n> plus
-O(touched) manifest rows, reading neither the stored state nor the
-manifest — ``ReplicaSink.process_batch`` in streaming/sinks.py). The
+one driver-written commit record, reading neither the stored state nor
+the manifest — ``ReplicaSink.process_batch`` in streaming/sinks.py). The
 periodic compaction (every ``compact_every`` commits) folds the whole
 state and is the one batch kind whose cost grows with the state.
 

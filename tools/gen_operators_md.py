@@ -1,14 +1,21 @@
 #!/usr/bin/env python
-"""Regenerate OPERATORS.md from the catalog registry (run from repo root)."""
+"""Regenerate OPERATORS.md from the catalog registry (run from repo root).
+
+``tests/test_operators_md.py`` fails when the committed file drifts from
+``render()``; rerun this script after adding or re-documenting an entry."""
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OPERATORS_MD = os.path.join(ROOT, "OPERATORS.md")
+
+sys.path.insert(0, ROOT)
 
 from tigate_spark.catalog import get_catalog  # noqa: E402
 
 
-def main() -> None:
+def render() -> str:
+    """OPERATORS.md's full text for the current catalog."""
     cat = get_catalog()
     lines = [
         "# Operator catalog",
@@ -28,9 +35,13 @@ def main() -> None:
             f"| `{name}` | {'✓' if spec.oracle else 'rows-only'} | "
             f"{'✓' if spec.bench else ''} | {doc} |"
         )
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote OPERATORS.md: {len(cat)} entries")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(OPERATORS_MD, "w") as f:
+        f.write(render())
+    print("wrote OPERATORS.md")
 
 
 if __name__ == "__main__":
